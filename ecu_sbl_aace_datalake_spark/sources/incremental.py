@@ -7,12 +7,21 @@ plain-parquet lakehouse:
 - :func:`upsert_table` — keyed merge. Partitioned tables use DYNAMIC
   partition overwrite so only partitions containing touched keys are
   rewritten (the scale path: a merge touching 1 day of a year-partitioned
-  100 TB table rewrites 1/365th of it). Unpartitioned tables fall back to a
-  full rewrite, flagged in the returned stats.
+  100 TB table rewrites 1/365th of it). The batch is computed once
+  (persisted for the call), the affected partitions come from ONE planning
+  ``collect()`` and the merge is ONE write; partitions the merge empties are
+  deleted through the Hadoop ``FileSystem`` (any storage URI). Unpartitioned
+  tables fall back to a full rewrite, flagged in the returned stats.
+- :func:`delete_rows` — keyed deletion over the same plan-then-write path.
 - :func:`incremental_append` — high-watermark ingestion: append only source
   rows newer than the stored watermark; watermark persisted in a JSON
   sidecar under the table path (the parquet-world stand-in for a streaming
   checkpoint).
+
+Single writer: nothing here is transactional. Two concurrent writers to one
+table can lose each other's rows, and a reader that scans a partition while
+it is being replaced can see it missing or half-written. Callers serialize
+writes per table (and reads that must not see a rewrite in flight).
 """
 
 from __future__ import annotations
@@ -23,11 +32,127 @@ import posixpath
 from typing import Any
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import CacheScope
 from .catalog import Lakehouse, table_path
 from .io import read_path
+
+
+def _plan_partitions(
+    existing: DataFrame,
+    keys_df: DataFrame,
+    keys: list[str],
+    partition_by: str,
+    batch: DataFrame | None = None,
+) -> tuple[dict, dict]:
+    """The whole partition plan of a keyed rewrite in one ``collect()``.
+
+    ``keys_df`` holds the key columns only. Returns ``(held, landing)``:
+    ``held`` maps each partition value holding a key of ``keys_df`` to
+    ``(rows, matched, dir)`` — its row count, how many of them match, and
+    its directory value (the string Spark writes in
+    ``{partition_by}=<dir>``); ``landing`` maps each partition value
+    ``batch`` writes to its batch row count.
+    """
+    hits = keys_df.distinct().withColumn("__hit", F.lit(1))
+    plan = (
+        existing.select(*dict.fromkeys([partition_by, *keys]))
+        .join(hits, keys, "left")
+        .groupBy(partition_by)
+        .agg(F.count(F.lit(1)).alias("__rows"), F.count("__hit").alias("__matched"))
+        .where(F.col("__matched") > 0)
+    )
+    if batch is not None:
+        plan = plan.unionByName(
+            batch.groupBy(partition_by)
+            .agg(F.count(F.lit(1)).alias("__rows"))
+            .withColumn("__matched", F.lit(None).cast("long"))
+        )
+    held, landing = {}, {}
+    for r in plan.withColumn("__dir", F.col(partition_by).cast("string")).collect():
+        if r["__matched"] is None:
+            landing[r[partition_by]] = r["__rows"]
+        else:
+            held[r[partition_by]] = (r["__rows"], r["__matched"], r["__dir"])
+    return held, landing
+
+
+def _in_parts(partition_by: str, values: set) -> Column:
+    """Filter on a set of partition values, null partition included."""
+    vals = [v for v in values if v is not None]
+    cond = F.col(partition_by).isin(vals)
+    if len(vals) < len(values):
+        cond = cond | F.col(partition_by).isNull()
+    return cond
+
+
+def _delete_partitions(
+    spark: SparkSession, path: str, partition_by: str, dirs: list[str | None]
+) -> None:
+    """Remove partition directories through the Hadoop FileSystem, so the
+    delete reaches abfss/s3/hdfs tables as well as local ones."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for d in dirs:
+        part = utils.getPartitionPathString(partition_by, d)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(root, part), True)
+
+
+def _rewrite_partitions(
+    spark: SparkSession,
+    path: str,
+    existing: DataFrame,
+    keys_df: DataFrame,
+    keys: list[str],
+    partition_by: str,
+    batch: DataFrame | None = None,
+) -> tuple[int, int]:
+    """Plan, then rewrite the affected partitions as ``kept ∪ batch`` in one
+    dynamic-overwrite write and delete the partitions the rewrite empties.
+    Returns ``(partitions_rewritten, batch_rows)``."""
+    held, landing = _plan_partitions(existing, keys_df, keys, partition_by, batch)
+    # dynamic overwrite only replaces partitions it writes: a partition the
+    # rewrite fully empties (every row matched, none landing) keeps its
+    # stale files unless removed explicitly
+    emptied = {
+        v: d for v, (rows, matched, d) in held.items()
+        if rows == matched and v not in landing
+    }
+    affected = set(held) | set(landing)
+    if affected - set(emptied):
+        kept = existing.where(_in_parts(partition_by, affected)).join(
+            keys_df, keys, "left_anti"
+        )
+        merged = kept if batch is None else kept.unionByName(batch)
+        (
+            merged.write.format("parquet")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_by)
+            .save(path)
+        )
+    _delete_partitions(spark, path, partition_by, list(emptied.values()))
+    return len(affected), sum(landing.values())
+
+
+def _swap_rewrite(path: str, merged: DataFrame, tag: str) -> None:
+    """Full rewrite through a temp dir + atomic swap (a path can't be
+    overwritten while it is being read)."""
+    import shutil
+    import uuid
+
+    tmp = f"{path}__{tag}_{uuid.uuid4().hex}"
+    merged.write.format("parquet").mode("overwrite").save(tmp)
+    parsed = urlparse(path)
+    old = parsed.path or path
+    back = f"{old}__old_{uuid.uuid4().hex}"
+    os.rename(old, back)
+    os.rename(urlparse(tmp).path or tmp, old)
+    shutil.rmtree(back, ignore_errors=True)
 
 
 def upsert_table(
@@ -41,67 +166,36 @@ def upsert_table(
     """MERGE semantics: rows matching ``keys`` are replaced by ``updates``,
     new keys are inserted, untouched rows are preserved.
 
-    Partitioned path: compute affected partitions from ``updates``, rebuild
-    only those (existing-minus-matched ∪ updates), write with dynamic
-    partition overwrite — untouched partitions' files are never rewritten.
+    ``updates`` is computed once: it is persisted for the call and released
+    before returning. Partitioned path: one ``collect()`` plans the affected
+    partitions — those the batch lands in plus those holding a matched key
+    (a key whose partition value changes must leave its old partition) —
+    and the partitions the merge empties; one dynamic-overwrite write then
+    rebuilds only the affected partitions as existing-minus-matched ∪
+    updates, so untouched partitions' files are never rewritten. Emptied
+    partitions are deleted through the Hadoop FileSystem. Single writer
+    per table (see the module docstring).
     """
     path = table_path(lakehouse, table_name)
     existing = read_path(spark, path, "parquet")
-    n_updates = updates.count()
-
-    if partition_by:
-        # affected partitions = partitions the updates land in PLUS the
-        # partitions currently holding any matched key — a key whose
-        # partition value changes must have its old row removed from the
-        # old partition, or it would survive as a duplicate
-        update_parts = updates.select(partition_by).distinct()
-        old_parts = (
-            existing.join(updates.select(*keys), keys, "left_semi")
-            .select(partition_by)
-            .distinct()
-        )
-        affected = [r[0] for r in update_parts.union(old_parts).distinct().collect()]
-        existing_affected = existing.where(F.col(partition_by).isin(affected))
-        kept = existing_affected.join(updates.select(*keys), keys, "left_anti")
-        merged = kept.unionByName(updates.select(*existing.columns))
-        merged_parts = {r[0] for r in merged.select(partition_by).distinct().collect()}
-        (
-            merged.write.format("parquet")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_by)
-            .save(path)
-        )
-        # dynamic overwrite only replaces partitions it writes: a partition
-        # fully emptied by the merge (every row was a moved/matched key)
-        # must be removed explicitly or its stale file survives
-        import shutil
-
-        for val in set(affected) - merged_parts:
-            stale = urlparse(posixpath.join(path, f"{partition_by}={val}")).path
-            shutil.rmtree(stale, ignore_errors=True)
-        return {
-            "mode": "dynamic-partition",
-            "partitions_rewritten": len(affected),
-            "updates": n_updates,
-        }
-
-    # unpartitioned: full rewrite through a temp dir + atomic swap (can't
-    # overwrite a path while reading it)
-    import shutil
-    import uuid
-
-    kept = existing.join(updates.select(*keys), keys, "left_anti")
-    merged = kept.unionByName(updates.select(*existing.columns))
-    tmp = f"{path}__upsert_{uuid.uuid4().hex}"
-    merged.write.format("parquet").mode("overwrite").save(tmp)
-    parsed = urlparse(path)
-    old = parsed.path or path
-    back = f"{old}__old_{uuid.uuid4().hex}"
-    os.rename(old, back)
-    os.rename(urlparse(tmp).path or tmp, old)
-    shutil.rmtree(back, ignore_errors=True)
-    return {"mode": "full-rewrite", "updates": n_updates}
+    scope = CacheScope()
+    try:
+        batch = scope.persist(updates.select(*existing.columns))
+        if partition_by:
+            n_parts, n_updates = _rewrite_partitions(
+                spark, path, existing, batch.select(*keys), keys, partition_by, batch
+            )
+            return {
+                "mode": "dynamic-partition",
+                "partitions_rewritten": n_parts,
+                "updates": n_updates,
+            }
+        n_updates = batch.count()
+        kept = existing.join(batch.select(*keys), keys, "left_anti")
+        _swap_rewrite(path, kept.unionByName(batch), "upsert")
+        return {"mode": "full-rewrite", "updates": n_updates}
+    finally:
+        scope.unpersist()
 
 
 def delete_rows(
@@ -115,48 +209,26 @@ def delete_rows(
     """Keyed deletion (the right-to-be-forgotten op): remove every row whose
     ``keys`` appear in ``keys_df``.
 
-    Partitioned path mirrors :func:`upsert_table`: only partitions that
-    contain targeted keys are rewritten (found via a semi-join — one pass),
-    so deleting one user from a user-partitioned 100 TB table rewrites one
-    partition. Unpartitioned: anti-join + atomic-swap rewrite.
+    Partitioned path shares :func:`upsert_table`'s plan-then-write: one
+    ``collect()`` finds the partitions holding targeted keys, one dynamic
+    overwrite rewrites only those, and a partition the delete empties is
+    removed through the Hadoop FileSystem — so deleting one user from a
+    user-partitioned 100 TB table touches one partition. Unpartitioned:
+    anti-join + atomic-swap rewrite. Single writer per table.
     """
     path = table_path(lakehouse, table_name)
     existing = read_path(spark, path, "parquet")
-    if partition_by:
-        affected = [
-            r[0]
-            for r in existing.join(keys_df, keys, "left_semi")
-            .select(partition_by)
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            return {"mode": "dynamic-partition", "partitions_rewritten": 0}
-        kept = existing.where(F.col(partition_by).isin(affected)).join(
-            keys_df, keys, "left_anti"
-        )
-        (
-            kept.write.format("parquet")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_by)
-            .save(path)
-        )
-        return {"mode": "dynamic-partition", "partitions_rewritten": len(affected)}
-
-    import shutil
-    import uuid
-
-    kept = existing.join(keys_df, keys, "left_anti")
-    tmp = f"{path}__delete_{uuid.uuid4().hex}"
-    kept.write.format("parquet").mode("overwrite").save(tmp)
-    parsed = urlparse(path)
-    old = parsed.path or path
-    back = f"{old}__old_{uuid.uuid4().hex}"
-    os.rename(old, back)
-    os.rename(urlparse(tmp).path or tmp, old)
-    shutil.rmtree(back, ignore_errors=True)
-    return {"mode": "full-rewrite"}
+    if not partition_by:
+        kept = existing.join(keys_df.select(*keys), keys, "left_anti")
+        _swap_rewrite(path, kept, "delete")
+        return {"mode": "full-rewrite"}
+    scope = CacheScope()
+    try:
+        targets = scope.persist(keys_df.select(*keys))
+        n_parts, _ = _rewrite_partitions(spark, path, existing, targets, keys, partition_by)
+    finally:
+        scope.unpersist()
+    return {"mode": "dynamic-partition", "partitions_rewritten": n_parts}
 
 
 def _watermark_path(lakehouse: Lakehouse, table_name: str) -> str:

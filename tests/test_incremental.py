@@ -5,6 +5,8 @@ from __future__ import annotations
 import tempfile
 
 import pyspark.sql.functions as F
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from ecu_sbl_aace_datalake_spark.sources.catalog import Lakehouse
 from ecu_sbl_aace_datalake_spark.sources.incremental import (
@@ -143,6 +145,24 @@ class TestDeleteRows:
         assert stats["partitions_rewritten"] == 0
         assert read_path(spark, f"{lh.tables_path}/orders", "parquet").count() == orders.count()
 
+    def test_delete_emptying_a_partition_removes_it(self, spark):
+        """Dynamic overwrite never writes a partition the delete empties, so
+        its old file must be removed explicitly or the row survives."""
+        import os
+        import tempfile
+
+        from ecu_sbl_aace_datalake_spark.sources.incremental import delete_rows
+
+        lh = Lakehouse("del4", tempfile.mkdtemp())
+        df = spark.createDataFrame([(1, "A"), (2, "B")], "id long, part string")
+        write_table(lh, "t", df, partition_by="part")
+        victims = spark.createDataFrame([(1,)], "id long")
+        stats = delete_rows(spark, lh, "t", victims, keys=["id"], partition_by="part")
+        assert stats["partitions_rewritten"] == 1
+        back = read_path(spark, f"{lh.tables_path}/t", "parquet")
+        assert {(r.id, r.part) for r in back.collect()} == {(2, "B")}
+        assert not os.path.exists(f"{lh.tables_path}/t/part=A")
+
 
 class TestPartitionKeyChange:
     def test_upsert_moving_key_between_partitions(self, spark, sf_dir):
@@ -180,6 +200,126 @@ class TestPartitionKeyChange:
         back = read_path(spark, f"{lh.tables_path}/t", "parquet")
         rows = {(r.id, r.part, r.v) for r in back.collect()}
         assert rows == {(1, "B", 9.0), (2, "B", 2.0)}, rows
+
+
+def _two_partition_table(spark, name):
+    lh = Lakehouse(name, tempfile.mkdtemp())
+    df = spark.createDataFrame(
+        [(1, "A", 1.0), (2, "B", 2.0)], "id long, part string, v double"
+    )
+    write_table(lh, "t", df, partition_by="part")
+    return lh
+
+
+class TestUpsertCost:
+    def test_batch_is_computed_once(self, spark):
+        """Every row of the batch is evaluated exactly once per upsert: the
+        plan and the write both read the persisted batch."""
+        lh = _two_partition_table(spark, "once")
+        evals = spark.sparkContext.accumulator(0)
+
+        @F.udf("long")
+        def counted_key(i):
+            evals.add(1)
+            return i
+
+        updates = spark.createDataFrame(
+            [(1, "A", 5.0), (3, "B", 1.0), (4, "C", 2.0)],
+            "i long, part string, v double",
+        ).select(counted_key("i").alias("id"), "part", "v")
+        stats = upsert_table(spark, lh, "t", updates, keys=["id"], partition_by="part")
+        assert stats["updates"] == 3
+        assert evals.value == 3
+        back = read_path(spark, f"{lh.tables_path}/t", "parquet")
+        assert {(r.id, r.part, r.v) for r in back.collect()} == {
+            (1, "A", 5.0), (2, "B", 2.0), (3, "B", 1.0), (4, "C", 2.0)
+        }
+
+    def test_spark_job_count_is_pinned(self, spark):
+        """One planning collect() and one write (11 jobs: with AQE each
+        query stage counts as one); any extra planning pass over the merge
+        pushes the count past the bound."""
+        lh = _two_partition_table(spark, "jobs")
+        updates = spark.createDataFrame(
+            [(1, "B", 5.0), (3, "C", 1.0)], "id long, part string, v double"
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("upsert_job_count", "upsert job count")
+        try:
+            upsert_table(spark, lh, "t", updates, keys=["id"], partition_by="part")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("upsert_job_count"))
+        assert 0 < n_jobs < 12, n_jobs
+
+
+_PARTS = ["a", "b", None]  # None: the __HIVE_DEFAULT_PARTITION__ dir
+_row = st.tuples(st.integers(0, 5), st.sampled_from(_PARTS), st.integers(0, 9))
+# one step: an upsert batch of unique keys (inserts, in-place updates and
+# moves across partitions), a keyed delete, or an op that empties a
+# partition (move all of it away, or delete all of it)
+_step = st.one_of(
+    st.tuples(
+        st.just("upsert"),
+        st.lists(_row, min_size=1, max_size=4, unique_by=lambda r: r[0]),
+    ),
+    st.tuples(st.just("delete"), st.sets(st.integers(0, 5), min_size=1, max_size=3)),
+    st.tuples(st.just("move_all"), st.tuples(st.sampled_from(_PARTS), st.sampled_from(_PARTS))),
+    st.tuples(st.just("delete_all"), st.sampled_from(_PARTS)),
+)
+
+
+class TestPartitionedMergeProperties:
+    """Random op sequences on a tiny partitioned table against a plain
+    dict oracle (key → (part, v)): contents, key uniqueness and
+    ``partitions_rewritten`` after every step."""
+
+    @given(
+        initial=st.lists(_row, min_size=1, max_size=5, unique_by=lambda r: r[0]),
+        steps=st.lists(_step, min_size=1, max_size=3),
+    )
+    @settings(max_examples=4, deadline=None)
+    def test_upsert_and_delete_match_dict_oracle(self, spark, initial, steps):
+        from ecu_sbl_aace_datalake_spark.sources.incremental import delete_rows
+
+        schema = "id long, part string, v long"
+        lh = Lakehouse("prop", tempfile.mkdtemp())
+        write_table(lh, "t", spark.createDataFrame(initial, schema), partition_by="part")
+        oracle = {k: (p, v) for k, p, v in initial}
+        for kind, arg in steps:
+            if kind == "move_all":
+                src, dst = arg
+                kind, arg = "upsert", [
+                    (k, dst, v) for k, (p, v) in oracle.items() if p == src
+                ]
+            elif kind == "delete_all":
+                kind, arg = "delete", {k for k, (p, _) in oracle.items() if p == arg}
+            if not arg or (kind == "delete" and set(oracle) <= set(arg)):
+                continue  # empty batch, or a delete that empties the table
+            if kind == "upsert":
+                stats = upsert_table(
+                    spark, lh, "t", spark.createDataFrame(arg, schema),
+                    keys=["id"], partition_by="part",
+                )
+                touched = {oracle[k][0] for k, _, _ in arg if k in oracle}
+                touched |= {p for _, p, _ in arg}
+                oracle.update((k, (p, v)) for k, p, v in arg)
+                assert stats["updates"] == len(arg)
+            else:
+                stats = delete_rows(
+                    spark, lh, "t",
+                    spark.createDataFrame([(k,) for k in sorted(arg)], "id long"),
+                    keys=["id"], partition_by="part",
+                )
+                touched = {oracle.pop(k)[0] for k in arg if k in oracle}
+            assert stats["partitions_rewritten"] == len(touched), (kind, arg)
+            got = [
+                (r.id, r.part, r.v)
+                for r in read_path(spark, f"{lh.tables_path}/t", "parquet").collect()
+            ]
+            assert len({k for k, _, _ in got}) == len(got), f"duplicate key: {got}"
+            assert sorted(got) == sorted((k, p, v) for k, (p, v) in oracle.items())
 
 
 class TestPartitionedCompaction:
